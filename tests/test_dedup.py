@@ -614,6 +614,37 @@ def test_lsh_bucket_cap_drops_hot_buckets(spark):
     assert capped == {(100, 101)}
 
 
+@pytest.mark.parametrize("cap", [None, 10_000])
+def test_incremental_twins_never_pair_an_id_with_itself(spark, cap):
+    """An id present in BOTH the batch and the index breaks the
+    disjoint-namespace contract; the batch-vs-index leg keeps every
+    orientation, so without the shared join's id1 != id2 guard the
+    MinHash and SimHash twins returned the self-pair (x, x) — a pair
+    the full-corpus run never produces. Real pairs still come back."""
+    uniq = "the quick brown fox jumps over the lazy dog near the river bank"
+    other = "columnar engines spill sorted runs to local disk under pressure"
+    idx = spark.createDataFrame([(1, uniq), (2, other)], "doc_id long, text string")
+    bdf = spark.createDataFrame(
+        [(1, uniq), (3, uniq + " today")], "doc_id long, text string"
+    )
+    pairs, _ = dedup.minhash_lsh_incremental(
+        bdf, dedup.minhash_signatures(idx), threshold=0.4, max_bucket=cap
+    )
+    got = {(r["id1"], r["id2"]) for r in pairs.collect()}
+    assert got == {(1, 3), (3, 1)}, got
+
+    fp = 0x0F0F0F0F0F0F0F0F
+    ifps = spark.createDataFrame([(1, fp), (2, ~fp)], "id long, sh64 long")
+    bfps = spark.createDataFrame([(1, fp), (3, fp ^ 1)], "id long, sh64 long")
+    got = {
+        (r["id1"], r["id2"])
+        for r in dedup.simhash_incremental_pairs(
+            bfps, ifps, max_hamming=7, chunks=8, max_bucket=cap
+        ).collect()
+    }
+    assert got == {(1, 3), (3, 1)}, got
+
+
 def test_minhash_lsh_incremental_cap_matches_capped_full_run(spark):
     """The incremental cap counts (band, bucket) over batch ∪ index —
     the SAME populations a capped full-corpus run sees — so the

@@ -360,3 +360,53 @@ def test_r14_registered_row_plan_pins(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+# Node counts of the near-dup entries' plans at sf0.001. The families
+# share one bucketed candidate join and one postings-Jaccard
+# (operators/dedup.py), so a change there shows up here. A count may
+# fall; a rise means an entry's plan gained a shuffle, a join or an
+# explode.
+_NEARDUP_PLAN_COUNTS = {
+    "dedup_minhash_lsh": {
+        "Exchange": 10, "SortMergeJoin": 4, "BroadcastHashJoin": 4, "Generate": 0,
+    },
+    "dedup_simhash": {
+        "Exchange": 6, "SortMergeJoin": 0, "BroadcastHashJoin": 5, "Generate": 2,
+    },
+    "dedup_minhash_incremental": {
+        "Exchange": 10, "SortMergeJoin": 4, "BroadcastHashJoin": 4, "Generate": 0,
+    },
+    "dedup_trigram_jaccard": {
+        "Exchange": 1, "SortMergeJoin": 0, "BroadcastHashJoin": 0, "Generate": 0,
+    },
+    "embedding_lsh_neardup": {
+        "Exchange": 4, "SortMergeJoin": 1, "BroadcastHashJoin": 2, "Generate": 0,
+    },
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_NEARDUP_PLAN_COUNTS))
+def test_neardup_entry_plan_counts_do_not_rise(spark, entry):
+    """Plan-shape pin for the near-dup entries: Exchange,
+    SortMergeJoin, BroadcastHashJoin and Generate nodes of the
+    pre-execution physical plan, each at most its recorded count.
+    Formatted explain lists every node once in its detail section as
+    ``(n) Name``; shuffle exchanges are the bare ``Exchange`` nodes."""
+    import re
+
+    from conftest import SF0001
+
+    from topn_clashroyal_etl_sql_snapshot_spark.plans import llm_queries as q
+
+    plan = _plan(getattr(q, entry)(spark, SF0001))
+    counts = {
+        node: len(re.findall(rf"^\(\d+\) {node}\b", plan, re.MULTILINE))
+        for node in _NEARDUP_PLAN_COUNTS[entry]
+    }
+    rose = {
+        node: (n, _NEARDUP_PLAN_COUNTS[entry][node])
+        for node, n in counts.items()
+        if n > _NEARDUP_PLAN_COUNTS[entry][node]
+    }
+    assert not rose, f"{entry}: (count, pinned) {rose}\n{plan}"

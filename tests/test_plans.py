@@ -62,6 +62,36 @@ def test_partial_aggregation_present(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
+def test_derived_caches_follow_rewritten_documents(spark, tmp_path):
+    """The session token and Jaccard-pair caches are derived from
+    documents.parquet: once the file is rewritten, read_testdata
+    re-reads it, and the derived entries must be rebuilt too instead
+    of serving the old corpus — dedup_components after the rewrite
+    equals a cold-cache run over the new file."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from topn_clashroyal_etl_sql_snapshot_spark.plans import llm_queries
+
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    shutil.copyfile(f"{SF}/documents.parquet", path)
+
+    def components():
+        return [tuple(r) for r in llm_queries.dedup_components(spark, sf).collect()]
+
+    before = components()
+    table = pq.read_table(path)
+    pq.write_table(table.filter(pc.less(table["doc_id"], 250)), path)
+    after = components()
+    for cache in (llm_queries._PAIRS_CACHE, llm_queries._TOKS_CACHE):
+        cache.get(spark, {}).pop(sf, None)
+    assert after == components()
+    assert after != before and all(r[0] < 250 for r in after)
+
+
 def test_query_layer_cc_fast_path_engages(spark):
     """r16: the shared pair cache carries its observed row count and
     the component consumers hand it to connected_components, whose

@@ -1157,6 +1157,73 @@ def _checkpointed_once(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def _set_sizes(postings: DataFrame) -> DataFrame:
+    """(id, n_sh): per-doc shingle-set size of an (id, sh) postings
+    frame."""
+    return postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+
+
+def _with_jaccard(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(id1, id2, jaccard) at ``jaccard ≥ threshold`` from shared-shingle
+    counts ``inter`` (id1, id2, n_common) and set sizes ``sizes``
+    (:func:`_set_sizes`): jaccard = |∩| / (|A|+|B|-|∩|). Integer counts
+    + one double division — oracle-exact across engines. The one
+    Jaccard formula of every verify path here. The sizes join AFTER
+    the intersection count: ``inter`` holds only pairs that share ≥1
+    shingle, far fewer rows than a candidate list on imprecise
+    screens, and the per-doc sizes frame is tiny (AQE broadcasts
+    it)."""
+    return (
+        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
+        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
+        .withColumn(
+            "jaccard",
+            F.col("n_common").cast("double")
+            / (F.col("n1") + F.col("n2") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id1", "id2", "jaccard")
+    )
+
+
+def _postings_jaccard(postings: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of every pair sharing ≥1 shingle of ``postings``
+    (id, sh): inverted-index self-join on the shingle (id1 < id2) →
+    intersection counts → :func:`_with_jaccard`. Costs O(Σ df²) —
+    callers bound df (``jaccard_pairs``' ``max_df``) or restrict the
+    postings to candidate docs first. The one intersection shared by
+    :func:`jaccard_pairs`, :func:`true_jaccard_for_pairs_dense` and
+    :func:`simhash_verified_pairs`' dense plan."""
+    inter = (
+        postings.select(F.col("id").alias("id1"), "sh")
+        .join(postings.select(F.col("id").alias("id2"), "sh"), "sh")
+        .filter(F.col("id1") < F.col("id2"))
+        .groupBy("id1", "id2")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return _with_jaccard(inter, _set_sizes(postings), threshold)
+
+
+def _candidate_postings(
+    cands: DataFrame, postings: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(cands, postings of candidate docs only). The pair list is
+    consumed twice (id extraction + the caller's pair joins), so it is
+    checkpointed — unless the caller already materialized it — and the
+    generator's join runs once. Small by contract: every generator
+    here is bucketed, never all-pairs. AQE turns the semi join into a
+    broadcast once it sees the candidate-id count at runtime."""
+    cands = _checkpointed_once(cands)
+    cand_ids = (
+        cands.select(F.col("id1").alias("id"))
+        .unionAll(cands.select(F.col("id2").alias("id")))
+        .distinct()
+    )
+    return cands, postings.join(cand_ids, "id", "left_semi")
+
+
 def true_jaccard_for_pairs(
     cands: DataFrame,
     postings: DataFrame,
@@ -1169,22 +1236,10 @@ def true_jaccard_for_pairs(
     first semi-joined down to candidate ids — set sizes and both pair
     joins then cost O(candidate postings), not O(corpus postings); at
     corpus scale the alternative shuffles every document's shingles to
-    verify a relative handful of pairs. AQE turns the semi join into a
-    broadcast once it sees the candidate-id count at runtime; everything
-    stays codegen'd (no HOFs).
-    Returns (id1, id2, jaccard) with jaccard ≥ threshold."""
-    # The pair list is consumed twice (id extraction + the pair joins);
-    # checkpoint it so the candidate generator's join runs once — unless
-    # the caller already materialized it. Small by contract — every
-    # generator here is bucketed, never all-pairs.
-    cands = _checkpointed_once(cands)
-    cand_ids = (
-        cands.select(F.col("id1").alias("id"))
-        .unionAll(cands.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    postings = postings.join(cand_ids, "id", "left_semi")
-    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    verify a relative handful of pairs. Everything stays codegen'd (no
+    HOFs). Returns (id1, id2, jaccard) with jaccard ≥ threshold."""
+    cands, postings = _candidate_postings(cands, postings)
+    sizes = _set_sizes(postings)
     # LENGTH FILTER (AllPairs/PPJoin's first prune, r12; OPT-IN since
     # r13): jaccard ≥ t bounds the set-size ratio — even when the
     # smaller set is fully contained, j = min/max — so pairs with
@@ -1216,27 +1271,12 @@ def true_jaccard_for_pairs(
     p1 = postings.select(F.col("id").alias("id1"), "sh")
     p2 = postings.select(F.col("id").alias("id2"), "sh")
     inter = (
-        sized.select("id1", "id2")
-        .join(p1, "id1")
+        sized.join(p1, "id1")
         .join(p2, ["id2", "sh"])
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    # set sizes join AFTER the intersection count: inter holds only
-    # pairs that share ≥1 shingle, far fewer rows than the candidate
-    # list on imprecise screens, and the per-doc sizes frame is tiny
-    # (AQE broadcasts it)
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    return _with_jaccard(inter, sizes, threshold)
 
 
 def true_jaccard_for_pairs_dense(
@@ -1261,34 +1301,9 @@ def true_jaccard_for_pairs_dense(
     :func:`simhash_verified_pairs` now skips the screen entirely in
     the dense regime. Candidates must carry ``id1 < id2`` (every
     generator here does)."""
-    cands = _checkpointed_once(cands)
-    cand_ids = (
-        cands.select(F.col("id1").alias("id"))
-        .unionAll(cands.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    p = postings.join(cand_ids, "id", "left_semi").localCheckpoint(
-        eager=False
-    )  # sizes + both self-join sides
-    sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        p.select(F.col("id").alias("id1"), "sh")
-        .join(p.select(F.col("id").alias("id2"), "sh"), "sh")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    cands, p = _candidate_postings(cands, postings)
+    # sizes + both self-join sides read the restricted postings
+    jac = _postings_jaccard(p.localCheckpoint(eager=False), threshold)
     # no forced broadcast of the verified relation: it is tiny on
     # curated corpora, but the dense path is selected exactly on
     # duplicate-heavy inputs where verified pairs can approach O(n²) —
@@ -1314,10 +1329,10 @@ def jaccard_pairs(
     Plan: postings → (optional) drop shingles with document frequency >
     max_df (boilerplate: quadratic candidate blowup, no signal) →
     self-join on shingle (id1 < id2) → intersection counts → join per-doc
-    set sizes → jaccard = |∩| / (|A|+|B|-|∩|). Integer counts + one double
-    division — oracle-exact across engines. Pass ``toks`` (a
-    ``token_arrays`` result) to share one tokenize scan with the other
-    dedup families.
+    set sizes → jaccard = |∩| / (|A|+|B|-|∩|) (:func:`_postings_jaccard`).
+    Integer counts + one double division — oracle-exact across engines.
+    Pass ``toks`` (a ``token_arrays`` result) to share one tokenize scan
+    with the other dedup families.
     """
     postings = hashed_postings(docs, text_col, id_col, n, toks=toks)
     if max_df is not None:
@@ -1325,27 +1340,7 @@ def jaccard_pairs(
         postings = (
             postings.join(df_counts.filter(F.col("_df") <= max_df), "sh", "left_semi")
         )
-    sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    a = postings.select(F.col("id").alias("id1"), "sh")
-    b = postings.select(F.col("id").alias("id2"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-        .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n1") + F.col("n2") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id1", "id2", "jaccard")
-    )
+    return _postings_jaccard(postings, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1439,43 +1434,20 @@ def _estimated_pairs(
 
 
 def _banded(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(id, band, bucket): each signature exploded to its band hashes —
-    the shared indexing step of the self-join and incremental paths."""
+    """(id, band, bucket): each signature exploded to its band keys
+    (:func:`lsh_buckets_expr`) — the key frame of the self-join and
+    incremental paths."""
     return signatures.select(
         "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: F.struct(
-                    bidx.alias("band"),
-                    F.xxhash64(
-                        bidx,
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("sig"), bidx * rows_per_band + 1, rows_per_band
-                                ),
-                                lambda v: v.cast("string"),
-                            ),
-                        ),
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
+        F.explode(lsh_buckets_expr(F.col("sig"), bands, rows_per_band)).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
 
 
-def _hot_buckets(
-    banded: DataFrame,
-    max_bucket: int,
-    keys: tuple[str, str] = ("band", "bucket"),
-) -> DataFrame:
-    """Join keys whose population EXCEEDS ``max_bucket`` — the shared
-    hot-bucket guard of every bucketed candidate join (LSH (band,
-    bucket) and the pigeonhole (chunk, val) alike). Anti-joining this
-    HOT set beats semi-joining its cold complement: hot keys number at
-    most ``rows/max_bucket`` (each holds > max_bucket rows), so the
+def _hot_buckets(keys: DataFrame, max_bucket: int, on: list[str]) -> DataFrame:
+    """Join keys whose population EXCEEDS ``max_bucket`` — the hot set
+    :func:`_bucket_pairs` drops. Anti-joining this HOT set beats
+    semi-joining its cold complement: hot keys number at most
+    ``rows/max_bucket`` (each holds > max_bucket rows), so the
     anti-join's build side is model-sized and AQE turns it into a
     broadcast at runtime — two fewer O(keys·n) exchanges than the
     cold-side semi-join (A/B'd r10: cost-neutral at sf0.1, strictly
@@ -1483,11 +1455,114 @@ def _hot_buckets(
     pathological all-hot corpus the set degrades gracefully to a
     shuffled join instead of OOMing the driver."""
     return (
-        banded.groupBy(*keys)
+        keys.groupBy(*on)
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > max_bucket)
-        .select(*keys)
+        .select(*on)
     )
+
+
+def _capped(keys: DataFrame, on: list[str], max_bucket: int | None) -> DataFrame:
+    """``keys`` without the rows of its hot keys (:func:`_hot_buckets`);
+    unchanged when ``max_bucket`` is None."""
+    if max_bucket is None:
+        return keys
+    return keys.join(_hot_buckets(keys, max_bucket, on), on, "left_anti")
+
+
+def _bucket_pairs(
+    keys: DataFrame,
+    on: tuple[str, ...],
+    max_bucket: int | None,
+    index: DataFrame | None = None,
+    carry: str | None = None,
+    expand: Column | None = None,
+) -> DataFrame:
+    """The bucketed candidate join of every near-dup family: pairs of
+    ids sharing a bucket key ``on`` — MinHash (band, bucket), the
+    64-bit fingerprint pigeonhole (chunk, val) of SimHash, pHash and
+    audio, and hyperplane LSH (rot, bucket).
+
+    ``keys`` is an (id, *on[, carry]) frame. Without ``index`` it is
+    self-joined and pairs come back oriented id1 < id2. With ``index``
+    (the same layout, built by earlier runs) it is the batch-vs-index
+    shape: ONE join of the batch against index ∪ batch tagged ``_idx``.
+    Batch-vs-index pairs keep id1 = batch id in every orientation
+    (namespaces are disjoint by caller contract), within-batch pairs
+    keep id1 < id2, and id1 = id2 never pairs — an id present in both
+    batch and index (a broken namespace contract) would otherwise pair
+    with itself, a pair the full run never produces. So the output is
+    exactly the batch-involving subset of the self-join over
+    index ∪ batch.
+
+    HOT-BUCKET CAP — the one recall contract of every family's
+    ``max_bucket``: any key holding MORE than ``max_bucket`` rows is
+    dropped before the join, counted over the whole population (batch
+    ∪ index in the incremental form — exactly the counts a full run
+    over the union sees, so the subset invariant holds cap-for-cap).
+    A near-identical cluster of c documents (template pages,
+    boilerplate with counters — routine in web crawls even after exact
+    dedup) collides in most of its keys, so uncapped it emits
+    O(keys·c²) rows before the distinct from ONE cluster (~10¹² rows
+    at c = 10⁶); capped, volume is bounded by Σ min(bucket, cap)² per
+    key space. Recall: a pair is lost only if EVERY key it shares is
+    hot — i.e. the pair sits inside a cluster already larger than the
+    cap, where any retained key (or the cluster's own exact-dup
+    collapse) still links it; pairs sharing many keys (high Jaccard,
+    low hamming) are the last to go, so loss concentrates on the
+    weakest candidates. Compose exact dedup FIRST
+    (``exact_dup_groups`` / ``content_fingerprint``) so identical
+    copies never reach the join; the cap then only fires on
+    pathological near-identical floods. ``max_bucket=None`` keeps the
+    exhaustive join.
+
+    Materialization: a key frame with more than one consumer is
+    materialized once through :func:`_checkpointed_once` (a no-op on
+    a frame the caller already checkpointed) — ``keys`` always (both
+    join sides, or the probe side plus the union), ``index`` when the
+    cap counts it (count + join); the incremental hot set is
+    checkpointed because it filters both sides.
+
+    ``expand`` is an array-valued Column over a key row; the probe
+    side (id1 — the batch, in the incremental form) joins once per
+    element, which replaces its LAST ``on`` column (SimHash's
+    single-bit piece variants, :func:`_piece_variants`).
+
+    Returns distinct (id1, id2). With ``carry`` (a column of ``keys``
+    and ``index``) it returns (id1, id2, <carry>_1, <carry>_2), one row
+    per bucket collision and NOT yet distinct: the caller filters on
+    the carried values, then applies the distinct — filtering first
+    can only shrink the distinct's exchange."""
+    on = list(on)
+    extra = [carry] if carry else []
+    keys = _checkpointed_once(keys)
+    if index is None:
+        keys = right = _capped(keys, on, max_bucket)
+        keep = F.col("id1") < F.col("id2")
+    else:
+        if max_bucket is not None:
+            index = _checkpointed_once(index)
+        right = (
+            index.select("id", *on, *extra).withColumn("_idx", F.lit(True))
+            .unionAll(keys.select("id", *on, *extra).withColumn("_idx", F.lit(False)))
+        )
+        if max_bucket is not None:
+            hot = _hot_buckets(right, max_bucket, on).localCheckpoint(eager=False)
+            keys = keys.join(hot, on, "left_anti")
+            right = right.join(hot, on, "left_anti")
+        keep = (F.col("id1") != F.col("id2")) & (
+            F.col("_idx") | (F.col("id1") < F.col("id2"))
+        )
+    left = keys.select(
+        F.col("id").alias("id1"), *on, *[F.col(c).alias(f"{c}_1") for c in extra]
+    )
+    if expand is not None:
+        left = left.withColumn(on[-1], F.explode(expand))
+    right = right.withColumnsRenamed({"id": "id2", **{c: f"{c}_2" for c in extra}})
+    pairs = left.join(right, on).filter(keep)
+    if carry is None:
+        return pairs.select("id1", "id2").distinct()
+    return pairs.select("id1", "id2", f"{carry}_1", f"{carry}_2")
 
 
 def lsh_candidate_pairs(
@@ -1502,54 +1577,26 @@ def lsh_candidate_pairs(
     b=32, r=4 the S-curve crosses ~0.5 at j≈0.42. One shuffle keyed by
     (band, band_hash); high-cardinality hashes distribute uniformly —
     EXCEPT when the corpus itself piles identical signatures into one
-    bucket.
-
-    Scale guard: a near-identical cluster of c documents (template
-    pages, boilerplate with counters — routine in web crawls even
-    after exact dedup) collides in most of its b bands, so the
-    self-join emits O(b·c²) candidate rows before the distinct — at
-    c = 10⁶ that is a ~10¹²-row shuffle from ONE cluster.
+    bucket: a near-identical cluster collides in most of its b bands.
     ``max_bucket`` drops any (band, bucket) key holding more than the
-    cap before the self-join, bounding candidate volume at
-    Σ min(bucket, cap)² — the same contract as
-    ``simhash_candidate_pairs``' cap and ``jaccard_pairs``' max_df.
-    Recall: a pair is lost only if EVERY band it collides in is hot —
-    and a bucket is hot only when ≥ max_bucket documents share that
-    band slice, i.e. the pair sits inside a duplicate cluster already
-    larger than the cap, where any retained band (or the cluster's
-    own exact-dup collapse) still links it. Compose exact dedup FIRST
-    (``exact_dup_groups`` / ``content_fingerprint``) so identical
-    copies never reach the LSH join; the cap then only fires on
-    pathological near-identical floods. ``max_bucket=None`` restores
-    the unconditional join for small corpora.
+    cap before the self-join — the hot-bucket cap and recall contract
+    of :func:`_bucket_pairs`, shared with ``simhash_candidate_pairs``
+    (and the same role as ``jaccard_pairs``' max_df).
 
     .. note:: **Behavior change (r10).** The cap is ON by default
        (10 000) here and in :func:`minhash_lsh_pairs` /
        :func:`minhash_lsh_verified_pairs`, where these entry points
        previously joined unconditionally. On a corpus with a
        (band, bucket) key above the cap, results CHANGE: that
-       bucket's candidates are dropped and the recall argument above
-       is probabilistic, not exact. The default is deliberate — an
+       bucket's candidates are dropped and the recall argument is
+       probabilistic, not exact. The default is deliberate — an
        uncapped join DNF'd at c=30k in the planted-flood measurement
        (SCALE.md) and a silent 10¹²-row shuffle is the worse default
        at the engine's design scale — but callers who need the old
        exhaustive semantics must pass ``max_bucket=None`` explicitly.
     """
-    banded = _banded(signatures, bands, rows_per_band)
-    if max_bucket is not None:
-        # three consumers (bucket count + both self-join sides) — same
-        # materialize-once trade as simhash_candidate_pairs' pieces
-        banded = banded.localCheckpoint(eager=False)
-        banded = banded.join(
-            _hot_buckets(banded, max_bucket), ["band", "bucket"], "left_anti"
-        )
-    a = banded.select(F.col("id").alias("id1"), "band", "bucket")
-    b = banded.select(F.col("id").alias("id2"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
+    return _bucket_pairs(
+        _banded(signatures, bands, rows_per_band), ("band", "bucket"), max_bucket
     )
 
 
@@ -1740,13 +1787,11 @@ def minhash_lsh_incremental(
 
     ``max_bucket`` is the same hot-bucket cap as
     :func:`lsh_candidate_pairs`, counted over the COMBINED
-    (batch ∪ index) population per (band, bucket) — exactly the
-    counts a full-corpus run would see, so the subset invariant above
-    holds cap-for-cap. Without it, one boilerplate cluster in a
-    100 TB index makes every colliding daily batch pay an
-    O(|cluster|·|batch∩bucket|) join; with it the index side of a hot
-    key is dropped before the join (recall contract and the
-    exact-dedup-first composition: see :func:`lsh_candidate_pairs`).
+    (batch ∪ index) population per (band, bucket), so the subset
+    invariant above holds cap-for-cap. Without it, one boilerplate
+    cluster in a 100 TB index makes every colliding daily batch pay an
+    O(|cluster|·|batch∩bucket|) join (orientation, cap and recall
+    contract: :func:`_bucket_pairs`).
 
     ``new_postings`` (a :func:`hashed_postings` frame for the batch)
     signs the batch from an ALREADY-SHINGLED scan instead of
@@ -1771,47 +1816,21 @@ def minhash_lsh_incremental(
     normally DROP — the index member is the canonical; within-batch
     components pick a keeper as usual)."""
     _check_banding(k, bands, rows_per_band)
-    sigs_new = (
-        _checkpointed_once(new_sigs)  # caller-injected: often already
-        if new_sigs is not None  # an eager checkpoint — don't double it
-        else (
+    if new_sigs is None:
+        new_sigs = (
             minhash_signatures(k=k, postings=new_postings)
             if new_postings is not None
             else minhash_signatures(new_docs, text_col, id_col, n, k)
-        ).localCheckpoint(eager=False)
+        )
+    # caller-injected signatures are often already an eager checkpoint
+    # — _checkpointed_once does not double them
+    sigs_new = _checkpointed_once(new_sigs)
+    cands = _bucket_pairs(
+        _banded(sigs_new, bands, rows_per_band),
+        ("band", "bucket"),
+        max_bucket,
+        index=_banded(index_sigs, bands, rows_per_band),
     )
-
-    banded_new = _banded(sigs_new, bands, rows_per_band).localCheckpoint(
-        eager=False
-    )
-    banded_idx = _banded(index_sigs, bands, rows_per_band).localCheckpoint(
-        eager=False
-    )
-    # ONE join covers both candidate classes (r10 rework — the earlier
-    # two-join form shuffled the batch banding twice and ran two
-    # distincts): the right side is index ∪ batch with an _idx flag;
-    # batch-vs-index pairs keep every orientation (namespaces are
-    # disjoint by contract), within-batch pairs keep id1 < id2.
-    right = (
-        banded_idx.withColumn("_idx", F.lit(True))
-        .unionAll(banded_new.withColumn("_idx", F.lit(False)))
-        .withColumnRenamed("id", "id2")
-    )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right.select(F.col("id2").alias("id"), "band", "bucket"),
-            max_bucket,
-        ).localCheckpoint(eager=False)
-        banded_new = banded_new.join(hot, ["band", "bucket"], "left_anti")
-        right = right.join(hot, ["band", "bucket"], "left_anti")
-    cands = (
-        banded_new.withColumnRenamed("id", "id1")
-        .join(right, ["band", "bucket"])
-        .filter(F.col("_idx") | (F.col("id1") < F.col("id2")))
-        .select("id1", "id2")
-        .distinct()
-    )
-
     all_sigs = index_sigs.unionAll(sigs_new)
     if not estimate:
         return cands, all_sigs
@@ -1944,6 +1963,68 @@ def _simhash_pieces(fingerprints: DataFrame, chunks: int) -> DataFrame:
     ).select("id", "sh64", "c.chunk", "c.val")
 
 
+def _piece_variants(chunks: int) -> Column:
+    """A piece value plus every single-bit flip WITHIN its piece width
+    (widths vary when 64 doesn't divide by ``chunks``) — the
+    ``piece_radius=1`` expansion of a :func:`_simhash_pieces` row. An
+    equi-join of the expanded side against exact pieces catches pairs
+    whose piece differs by ≤ 1 bit; variants are distinct, so a
+    matching chunk contributes each ordered pair exactly once."""
+    base, extra = divmod(SIMHASH_BITS, chunks)
+    return F.expr(
+        f"concat(array(val), transform(sequence(0, {base} - 1 + "
+        f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
+        "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
+    )
+
+
+def _pigeonhole_pairs(
+    pieces: DataFrame,
+    chunks: int,
+    max_hamming: int,
+    max_bucket: int | None,
+    piece_radius: int,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """(id1, id2, hamming ≤ max_hamming): the (chunk, val) bucket join
+    of :func:`_simhash_pieces` frames (:func:`_bucket_pairs`, carrying
+    the fingerprints), screened by bit_count(xor). The hamming filter
+    runs BEFORE the distinct: the xor+popcount is one codegen'd
+    instruction per joined row, so filtering first can only shrink the
+    distinct's exchange. On corpora where bucket collisions are mostly
+    far pairs (random text) this cuts the distinct input by orders of
+    magnitude; on the templated testdata corpus (r7 profile: 6.7M joined
+    rows, most already within radius) it measures neutral — never
+    worse. (A bare-id join + post-distinct fingerprint re-join was
+    A/B'd for the expanded join and LOST — 19.4 vs 14.7 s entry m3:
+    the payload trim saves less than the unfiltered distinct + two
+    extra joins cost.)"""
+    if piece_radius not in (0, 1):
+        raise ValueError(
+            f"piece_radius must be 0 or 1, got {piece_radius} (wider "
+            "per-piece radii grow the variant expansion quadratically; "
+            "lower `chunks` instead — the guarantee is "
+            "chunks·(piece_radius+1) − 1)"
+        )
+    pairs = _bucket_pairs(
+        pieces,
+        ("chunk", "val"),
+        max_bucket,
+        index=index,
+        carry="sh64",
+        expand=_piece_variants(chunks) if piece_radius == 1 else None,
+    )
+    return (
+        pairs.select(
+            "id1",
+            "id2",
+            F.bit_count(F.col("sh64_1").bitwiseXOR(F.col("sh64_2"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def simhash_candidate_pairs(
     fingerprints: DataFrame,
     max_hamming: int = 3,
@@ -1983,71 +2064,21 @@ def simhash_candidate_pairs(
     distribution makes common. ``max_bucket`` drops any (chunk, value)
     bucket holding more docs than the cap before the self-join, bounding
     candidate volume at chunks·Σ min(bucket, cap)² and the join at
-    linear-in-n work. A dropped bucket can only lose pairs whose ONLY
-    shared chunk is that hot one — pairs at low hamming share several
-    chunks, so recall loss concentrates on the weakest candidates (same
-    contract as ``jaccard_pairs``'s max_df boilerplate cap). Set
-    ``max_bucket=None`` to recover the unconditional pigeonhole
-    guarantee on small corpora."""
-    if piece_radius not in (0, 1):
-        raise ValueError(
-            f"piece_radius must be 0 or 1, got {piece_radius} (wider "
-            "per-piece radii grow the variant expansion quadratically; "
-            "lower `chunks` instead — the guarantee is "
-            "chunks·(piece_radius+1) − 1)"
-        )
+    linear-in-n work — the hot-bucket cap and recall contract of
+    :func:`_bucket_pairs` (a dropped bucket loses only pairs whose
+    ONLY shared chunk is that hot one). Set ``max_bucket=None`` to
+    recover the unconditional pigeonhole guarantee on small corpora."""
     if pieces is None:
-        pieces = _simhash_pieces(fingerprints, chunks).localCheckpoint(
-            eager=False
-        )
+        pieces = _simhash_pieces(fingerprints, chunks)
     # ^ callers that already sliced the fingerprints (the verified-pairs
     # wrapper slices once for its volume estimator) pass ``pieces`` — a
     # checkpointed, UNCAPPED ``_simhash_pieces(fingerprints, chunks)``
     # frame — so the fingerprint aggregation + chunk explode runs once
-    # per plan, not once per consumer (r13)
-    # ^ pieces has THREE consumers (the df-cap bucket count and both
-    # self-join sides), each of which would otherwise recompute the
-    # upstream fingerprint aggregation + chunk explode; materializing
-    # chunks·N compact int rows once is the same trade hashed_postings
-    # makes (r9, A/B'd: entry m3 4.93 → 3.27 s, results identical).
-    if max_bucket is not None:
-        hot = _hot_buckets(pieces, max_bucket, keys=("chunk", "val"))
-        pieces = pieces.join(hot, ["chunk", "val"], "left_anti")
-    a = pieces.select(F.col("id").alias("id1"), F.col("sh64").alias("h1"), "chunk", "val")
-    b = pieces.select(F.col("id").alias("id2"), F.col("sh64").alias("h2"), "chunk", "val")
-    if piece_radius == 1:
-        # one side expands each piece value to identity + every
-        # single-bit flip WITHIN its piece width (widths vary when 64
-        # doesn't divide by chunks); the equi-join then catches pairs
-        # whose piece differs by ≤ 1 bit. Variants are distinct, so a
-        # matching chunk contributes each ordered pair exactly once.
-        # (A bare-id join + post-distinct fingerprint re-join was
-        # A/B'd here and LOST — 19.4 vs 14.7 s entry m3: the payload
-        # trim saves less than the unfiltered distinct + two extra
-        # joins cost.)
-        base, extra = divmod(SIMHASH_BITS, chunks)
-        variants = F.expr(
-            f"concat(array(val), transform(sequence(0, {base} - 1 + "
-            f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
-            "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
-        )
-        b = b.select(
-            "id2", "h2", "chunk", F.explode(variants).alias("val")
-        )
-    return (
-        a.join(b, ["chunk", "val"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"))
-        # hamming filter BEFORE the distinct: the xor+popcount is one
-        # codegen'd instruction per joined row, so filtering first can
-        # only shrink the distinct's exchange. On corpora where bucket
-        # collisions are mostly far pairs (random text) this cuts the
-        # distinct input by orders of magnitude; on the templated
-        # driver corpus (r7 profile: 6.7M joined rows, most already
-        # within radius) it measures neutral — never worse.
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    # per plan, not once per consumer (r13). Materializing chunks·N
+    # compact int rows once (the df-cap bucket count and both self-join
+    # sides read them) is the same trade hashed_postings makes (r9,
+    # A/B'd: entry m3 4.93 → 3.27 s, results identical).
+    return _pigeonhole_pairs(pieces, chunks, max_hamming, max_bucket, piece_radius)
 
 
 def simhash_incremental_pairs(
@@ -2076,7 +2107,8 @@ def simhash_incremental_pairs(
     the union (same pigeonhole guarantee: any pair within hamming ≤
     chunks-1 shares an exact chunk; same ``max_bucket`` hot-bucket
     cap, counted over batch ∪ index so the subset invariant holds
-    cap-for-cap; id namespaces must not collide — caller contract).
+    cap-for-cap; id namespaces must not collide — caller contract;
+    orientation and cap: :func:`_bucket_pairs`).
 
     ``piece_radius=1`` (r12): the same multi-index extension as
     :func:`simhash_candidate_pairs` — the BATCH side (the small frame)
@@ -2085,44 +2117,13 @@ def simhash_incremental_pairs(
     pieces stay untouched; the ≡-full-run-subset invariant holds
     radius-for-radius because within-piece distance ≤ 1 is symmetric
     (the variant match fires regardless of which side expanded)."""
-    if piece_radius not in (0, 1):
-        raise ValueError(
-            f"piece_radius must be 0 or 1, got {piece_radius}"
-        )
-    p_new = _simhash_pieces(new_fps, chunks).localCheckpoint(eager=False)
-    p_idx = _simhash_pieces(index_fps, chunks).localCheckpoint(eager=False)
-    right = (
-        p_idx.withColumn("_idx", F.lit(True))
-        .unionAll(p_new.withColumn("_idx", F.lit(False)))
-        .withColumnsRenamed({"id": "id2", "sh64": "h2"})
-    )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right, max_bucket, keys=("chunk", "val")
-        ).localCheckpoint(eager=False)
-        p_new = p_new.join(hot, ["chunk", "val"], "left_anti")
-        right = right.join(hot, ["chunk", "val"], "left_anti")
-    left = p_new.withColumnsRenamed({"id": "id1", "sh64": "h1"})
-    if piece_radius == 1:
-        base, extra = divmod(SIMHASH_BITS, chunks)
-        variants = F.expr(
-            f"concat(array(val), transform(sequence(0, {base} - 1 + "
-            f"(CASE WHEN chunk < {extra} THEN 1 ELSE 0 END)), "
-            "i -> val ^ shiftleft(CAST(1 AS BIGINT), i)))"
-        )
-        left = left.select(
-            "id1", "h1", "chunk", F.explode(variants).alias("val")
-        )
-    return (
-        left.join(right, ["chunk", "val"])
-        .filter(F.col("_idx") | (F.col("id1") < F.col("id2")))
-        .select(
-            "id1",
-            "id2",
-            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _pigeonhole_pairs(
+        _simhash_pieces(new_fps, chunks),
+        chunks,
+        max_hamming,
+        max_bucket,
+        piece_radius,
+        index=_simhash_pieces(index_fps, chunks),
     )
 
 
@@ -2630,12 +2631,9 @@ def simhash_verified_pairs(
     # that actually predicted r12's cost. One aggregation over the
     # checkpointed pieces frame.
     pieces = _simhash_pieces(fps, chunks).localCheckpoint(eager=False)
-    capped = pieces
-    if max_bucket is not None:
-        hot = _hot_buckets(pieces, max_bucket, keys=("chunk", "val"))
-        capped = pieces.join(hot, ["chunk", "val"], "left_anti")
     est = (
-        capped.groupBy("chunk", "val")
+        _capped(pieces, ["chunk", "val"], max_bucket)
+        .groupBy("chunk", "val")
         .agg(F.count(F.lit(1)).alias("m"))
         .agg(F.sum(F.col("m") * (F.col("m") - 1) / 2).alias("v"))
         .collect()[0]["v"]
@@ -2649,25 +2647,7 @@ def simhash_verified_pairs(
         # hamming post-filter (see PLAN CHOICE above). hashed_postings
         # already returns a checkpointed frame — _checkpointed_once
         # avoids storing a second copy of the corpus postings
-        p = _checkpointed_once(postings)
-        sizes = p.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-        inter = (
-            p.select(F.col("id").alias("id1"), "sh")
-            .join(p.select(F.col("id").alias("id2"), "sh"), "sh")
-            .filter(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        jac = (
-            inter.join(sizes.withColumnsRenamed({"id": "id1", "n_sh": "n1"}), "id1")
-            .join(sizes.withColumnsRenamed({"id": "id2", "n_sh": "n2"}), "id2")
-            .withColumn(
-                "jaccard",
-                F.col("n_common").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("n_common")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        jac = _postings_jaccard(_checkpointed_once(postings), threshold)
         # the hamming screen, applied to the tiny verified relation:
         # two fingerprint lookups (AQE broadcasts the 16-byte/doc fps
         # frame) instead of a 3M-row candidate join

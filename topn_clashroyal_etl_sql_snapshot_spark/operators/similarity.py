@@ -231,9 +231,9 @@ def lsh_neardup_pairs(
 
     ``max_bucket`` (r13, default off to preserve the exact-recall
     contract above) drops (rot, bucket) keys whose population exceeds
-    it before the self-join — the same hot-bucket guard as
-    ``dedup.lsh_candidate_pairs`` for corpora with boilerplate
-    clusters, and the cap the incremental form
+    it before the self-join — the shared hot-bucket cap of
+    ``dedup._bucket_pairs`` (recall contract there) for corpora with
+    boilerplate clusters, and the cap the incremental form
     (:func:`lsh_neardup_incremental`) mirrors count-for-count."""
     # Materialize the sketches EAGERLY: both self-join sides consume
     # them, and the 64-aggregate sketch tree is expensive for Catalyst —
@@ -241,21 +241,11 @@ def lsh_neardup_pairs(
     # join/verify plan optimizes over a small LogicalRDD instead of two
     # copies of the sketch plan. (Blocks release on GC — see
     # dedup.hashed_postings.)
+    from .dedup import _bucket_pairs
+
     sk = hyperplane_sketches(embeddings, planes, rotations, id_col, vec_col)
     sk = sk.localCheckpoint(eager=True)
-    if max_bucket is not None:
-        from .dedup import _hot_buckets
-
-        hot = _hot_buckets(sk, max_bucket, keys=("rot", "bucket"))
-        sk = sk.join(hot, ["rot", "bucket"], "left_anti")
-    a = sk.select(F.col("id").alias("id1"), "rot", "bucket")
-    b = sk.select(F.col("id").alias("id2"), "rot", "bucket")
-    cands = (
-        a.join(b, ["rot", "bucket"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
+    cands = _bucket_pairs(sk, ("rot", "bucket"), max_bucket)
     return exact_cosine_for_pairs(cands, embeddings, threshold, id_col, vec_col)
 
 
@@ -370,10 +360,11 @@ def lsh_neardup_incremental(
       into the caller's generation publish).
 
     ``max_bucket`` caps hot (rot, bucket) keys counted over the
-    COMBINED batch ∪ index population — exactly the counts the
-    full-corpus run sees, so the subset invariant holds cap-for-cap
-    (a boilerplate cluster in the index would otherwise make every
-    colliding batch pay an O(|cluster|·|batch∩bucket|) join).
+    COMBINED batch ∪ index population, so the subset invariant holds
+    cap-for-cap (a boilerplate cluster in the index would otherwise
+    make every colliding batch pay an O(|cluster|·|batch∩bucket|)
+    join; orientation, cap and recall contract:
+    ``dedup._bucket_pairs``).
 
     ``new_sketches`` (a :func:`hyperplane_sketches` frame for the
     batch, same ``planes``/``rotations``) skips the batch sketch pass
@@ -381,48 +372,17 @@ def lsh_neardup_incremental(
     ``new_postings``: a caller that also persists the batch's
     sketches (the ingest loop's state delta) computes them ONCE and
     feeds both uses."""
-    from .dedup import _checkpointed_once, _hot_buckets
+    from .dedup import _bucket_pairs, _checkpointed_once
 
-    sk_new = (
-        # caller-injected frames are often already eager checkpoints —
-        # _checkpointed_once skips the redundant second materialization
-        _checkpointed_once(new_sketches)
+    # caller-injected frames are often already eager checkpoints —
+    # _checkpointed_once skips the redundant second materialization
+    sk_new = _checkpointed_once(
+        new_sketches
         if new_sketches is not None
-        else hyperplane_sketches(
-            new_embeddings, planes, rotations, id_col, vec_col
-        ).localCheckpoint(eager=False)
+        else hyperplane_sketches(new_embeddings, planes, rotations, id_col, vec_col)
     )
-    # ONE join covers both candidate classes (the minhash_lsh_incremental
-    # shape): right side is index ∪ batch with an _idx flag — index
-    # collisions keep every orientation (disjoint namespaces), batch
-    # collisions keep id1 < id2.
-    banded_new = sk_new
-    right = (
-        index_sketches.withColumn("_idx", F.lit(True))
-        .unionByName(sk_new.withColumn("_idx", F.lit(False)))
-        .withColumnRenamed("id", "id2")
-    )
-    if max_bucket is not None:
-        hot = _hot_buckets(
-            right.select(F.col("id2").alias("id"), "rot", "bucket"),
-            max_bucket,
-            keys=("rot", "bucket"),
-        ).localCheckpoint(eager=False)
-        banded_new = banded_new.join(hot, ["rot", "bucket"], "left_anti")
-        right = right.join(hot, ["rot", "bucket"], "left_anti")
-    cands = (
-        banded_new.withColumnRenamed("id", "id1")
-        .join(right, ["rot", "bucket"])
-        # id1 != id2 defends against a violated id-namespace contract
-        # (an id present in BOTH batch and index would otherwise emit
-        # a self-pair the full-corpus run never produces); within
-        # batch, keep id1 < id2
-        .filter(
-            (F.col("id1") != F.col("id2"))
-            & (F.col("_idx") | (F.col("id1") < F.col("id2")))
-        )
-        .select("id1", "id2")
-        .distinct()
+    cands = _bucket_pairs(
+        sk_new, ("rot", "bucket"), max_bucket, index=index_sketches
     )
     pairs = exact_cosine_for_pairs(
         cands,

@@ -32,7 +32,12 @@ from .xxh64_sql import xxh64_bucket_ctes
 # (same rationale as domain_queries._CACHE: an id()-keyed dict could
 # hand a new session DataFrames bound to a stopped SparkContext), then
 # by sf_dir. The cached plan is lazily local-checkpointed, so the first
-# consumer materializes it and later consumers reuse the blocks.
+# consumer materializes it and later consumers reuse the blocks. Each
+# entry also holds the documents relation it was built from, and is
+# reused only while read_testdata still returns that same object: the
+# reader re-reads a rewritten documents.parquet (its (mtime_ns, size)
+# signature changed), and a derived entry must not keep serving the
+# old corpus.
 _PAIRS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 # The tokenize pass (normalize + regex split — the dominant per-row
@@ -44,13 +49,15 @@ _TOKS_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _toks_cached(spark, sf_dir: str):
+    docs = read_testdata(spark, sf_dir, "documents")
     per_session = _TOKS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        docs = read_testdata(spark, sf_dir, "documents")
-        per_session[sf_dir] = dedup.token_arrays(docs).localCheckpoint(
-            eager=False
+    hit = per_session.get(sf_dir)
+    if hit is None or hit[0] is not docs:
+        hit = per_session[sf_dir] = (
+            docs,
+            dedup.token_arrays(docs).localCheckpoint(eager=False),
         )
-    return per_session[sf_dir]
+    return hit[1]
 
 
 def _jaccard_pairs_cached(spark, sf_dir: str):
@@ -73,9 +80,10 @@ def _jaccard_pairs_counted(spark, sf_dir: str):
     lazily."""
     from pyspark.sql import Observation
 
+    docs = read_testdata(spark, sf_dir, "documents")
     per_session = _PAIRS_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        docs = read_testdata(spark, sf_dir, "documents")
+    hit = per_session.get(sf_dir)
+    if hit is None or hit[0] is not docs:
         obs = Observation()
         pairs = (
             dedup.jaccard_pairs(
@@ -84,8 +92,8 @@ def _jaccard_pairs_counted(spark, sf_dir: str):
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        per_session[sf_dir] = (pairs, int(obs.get["n"]))
-    return per_session[sf_dir]
+        hit = per_session[sf_dir] = (docs, pairs, int(obs.get["n"]))
+    return hit[1], hit[2]
 
 # Shared DuckDB tokenization fragment — must mirror functions/text.py
 # (same regex class, same empty-token filter).
