@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from topn_clashroyal_etl_sql_snapshot_spark.sources import ingest, readers
 
 
@@ -100,10 +102,9 @@ def test_every_snapshot_table_is_read_table_readable():
     assert not missing, missing
 
 
-def test_snapshot_roundtrips_through_read_table(spark, tmp_path):
-    """Write a full snapshot (atomic path) and read every table back
-    via read_table with its declared schema — the CLI's validate-side
-    read, end-to-end."""
+@pytest.fixture(scope="module")
+def fixture_warehouse(spark, tmp_path_factory):
+    """The fixture landing zone built and published (atomic path)."""
     from topn_clashroyal_etl_sql_snapshot_spark.plans import pipeline
     from topn_clashroyal_etl_sql_snapshot_spark.sinks import (
         write_snapshot_atomic,
@@ -120,12 +121,44 @@ def test_snapshot_roundtrips_through_read_table(spark, tmp_path):
         overrides=readers.read_overrides(spark, "fixtures/overrides.parquet"),
         top_n=8,
     )
-    wh = str(tmp_path / "wh")
+    wh = str(tmp_path_factory.mktemp("fixture_wh") / "wh")
     write_snapshot_atomic(res.tables, wh)
     res.unpersist()
+    return wh
+
+
+def test_snapshot_roundtrips_through_read_table(spark, fixture_warehouse):
+    """Write a full snapshot (atomic path) and read every table back
+    via read_table with its declared schema — the CLI's validate-side
+    read, end-to-end."""
+    from topn_clashroyal_etl_sql_snapshot_spark.plans import pipeline
+    from topn_clashroyal_etl_sql_snapshot_spark.sources import readers
+
     for name in pipeline.SNAPSHOT_TABLES:
-        back = readers.read_table(spark, wh, name)
+        back = readers.read_table(spark, fixture_warehouse, name)
         assert back.count() > 0, name
+
+
+def test_read_table_declared_schema_matches_written_files(
+    spark, fixture_warehouse
+):
+    """read_table reads with WAREHOUSE_SCHEMAS instead of inferring from
+    footers; the declared schema must be exactly what inference finds
+    in the published files — names, types and column order, including
+    the deck_type-partitioned tables, whose partition column comes
+    last."""
+    import os
+
+    from topn_clashroyal_etl_sql_snapshot_spark.plans import pipeline
+    from topn_clashroyal_etl_sql_snapshot_spark.sources import readers
+
+    for name in pipeline.SNAPSHOT_TABLES:
+        inferred = spark.read.parquet(os.path.join(fixture_warehouse, name))
+        declared = readers.read_table(spark, fixture_warehouse, name)
+        assert declared.dtypes == inferred.dtypes, name
+    assert readers.read_table(
+        spark, fixture_warehouse, "meta_type_cards"
+    ).columns[-1] == "deck_type"
 
 
 def test_read_testdata_relation_cache(spark, tmp_path):

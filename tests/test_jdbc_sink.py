@@ -785,3 +785,71 @@ def test_write_snapshot_atomic_recovers_parked_old_snapshot(spark, tmp_path):
 
     with pytest.raises(ValueError, match="non-local"):
         sink.write_snapshot_atomic(v2, "hdfs://nn/wh")
+
+
+def _drain_listener_bus(spark):
+    """Wait until the status store has seen every posted job event, so
+    job counts and active-job lists read after an action are final."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_write_snapshot_concurrent_failure_keeps_old_snapshot(spark, tmp_path):
+    """Tables are staged concurrently: when one fails while five others
+    are being written, the failure propagates only after every write
+    already running has finished (no job outlives the call), and the
+    serving directory is still the complete OLD snapshot."""
+    import os
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    wh = str(tmp_path / "wh")
+    names = ["t0", "t1", "t2", "t3", "t4", "t5"]
+    sink.write_snapshot_atomic(
+        {n: spark.createDataFrame([(n, 1)], "name string, v long") for n in names},
+        wh,
+    )
+
+    def slow(n):  # one task sleeping 1 s, so writes overlap the failure
+        return spark.range(1, numPartitions=1).select(
+            F.lit(n).alias("name"),
+            F.expr("reflect('java.lang.Thread', 'sleep', 1000L)").alias("v"),
+        )
+
+    boom = spark.range(1).select(
+        F.assert_true(F.col("id") < 0).cast("string").alias("name"),
+        F.col("id").alias("v"),
+    )
+    new = {"t0": boom, **{n: slow(n) for n in names[1:]}}
+    with pytest.raises(Exception, match="id < 0"):
+        sink.write_snapshot_atomic(new, wh)
+    _drain_listener_bus(spark)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert sorted(os.listdir(wh)) == names
+    for n in names:
+        got = [tuple(r) for r in spark.read.parquet(f"{wh}/{n}").collect()]
+        assert got == [(n, 1)], n
+
+
+def test_write_snapshot_jobs_keep_the_caller_job_group(spark, tmp_path):
+    """Every job a concurrent publish launches runs in the caller's job
+    group — the attribution a per-layer trace relies on — and the
+    caller's group is still set afterwards."""
+    sc = spark.sparkContext
+    tables = {
+        f"t{i}": spark.range(10 * (i + 1)).selectExpr("id", f"id * {i} AS v")
+        for i in range(6)
+    }
+    group = "test-concurrent-publish"
+    sc.setJobGroup(group, "publish")
+    try:
+        before = sc._jsc.sc().dagScheduler().numTotalJobs()
+        sink.write_snapshot_atomic(tables, str(tmp_path / "wh"))
+        launched = sc._jsc.sc().dagScheduler().numTotalJobs() - before
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    _drain_listener_bus(spark)
+    assert launched >= len(tables)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == launched

@@ -44,7 +44,6 @@ def snapshot(spark):
         catalog=spark.createDataFrame(CATALOG_ROWS, CARD_METADATA_SCHEMA),
         overrides=spark.createDataFrame(overrides, OVERRIDES_SCHEMA),
         top_n=5,
-        collect_counters=False,
     )
     yield result
     result.unpersist()

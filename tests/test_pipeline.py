@@ -40,8 +40,56 @@ def _rows(df, cols):
 
 def test_counters(snapshot):
     result, oracle = snapshot
-    assert result.counters["deduped_matches"] == oracle["deduped_matches"]
-    assert result.counters["scanned_entries"] > oracle["deduped_matches"]
+    assert result.counters == {
+        "scanned_entries": oracle["counters"]["scanned_entries"],
+        "deduped_matches": oracle["counters"]["deduped_matches"],
+    }
+
+
+def test_build_snapshot_scans_landing_once(spark):
+    """The E7 counters are observed inside the participant checkpoint
+    job, so a build reads every landing record exactly once: the input
+    records of all its stages sum to the battle lines + the leaderboard
+    rows (its size guard) + the catalog and overrides rows (driver
+    maps, broadcast join)."""
+    from topn_clashroyal_etl_sql_snapshot_spark.sources import readers
+
+    def lines(path):
+        with open(path) as fh:
+            return sum(1 for ln in fh if ln.strip())
+
+    n_battles = lines("fixtures/battles.jsonl")
+    n_leaderboard = lines("fixtures/leaderboard.jsonl")
+    catalog = readers.read_card_catalog(spark, "fixtures/card_catalog.json")
+    overrides = readers.read_overrides(spark, "fixtures/overrides.parquet")
+    n_catalog, n_overrides = catalog.count(), overrides.count()
+    sc = spark.sparkContext
+    group = "test-build-snapshot-scan"
+    sc.setJobGroup(group, "build_snapshot")
+    try:
+        res = pipeline.build_snapshot(
+            spark,
+            battles=readers.read_battles_json(spark, "fixtures/battles.jsonl"),
+            leaderboard=readers.read_leaderboard_json(
+                spark, "fixtures/leaderboard.jsonl"
+            ),
+            catalog=catalog,
+            overrides=overrides,
+            top_n=8,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    res.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = {
+        sid for j in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(j).stageIds
+    }
+    read = sum(store.lastStageAttempt(sid).inputRecords() for sid in stages)
+    assert res.counters["scanned_entries"] == n_battles
+    assert read == n_battles + n_leaderboard + n_catalog + n_overrides
 
 
 def test_player_dim(snapshot):
@@ -181,6 +229,135 @@ def test_validation_suite_green(snapshot):
     checks = validate.run_all(result.tables, expected_top_n=TOP_N)
     failures = [c for c in checks if not c.passed]
     assert not failures, failures
+
+
+def _corrupt_warehouse(spark, empty_topn=False):
+    """A small warehouse with seeded corruption: a 7-card deck, wins >
+    uses (and wins < 0), FK orphans (a player_decks deck_hash and a
+    decks deck_type), an 'unknown' share of 60%, 2 players for an
+    expected 3. ``empty_topn`` zeroes the player facts' uses (G5's
+    topn = 0 case)."""
+
+    def df(rows, ddl):
+        return spark.createDataFrame(rows, ddl)
+
+    ids = list(range(26000001, 26000009))
+    deck_cards = [("d1", c, "normal", i) for i, c in enumerate(ids)]
+    deck_cards += [("d2", c, "normal", i) for i, c in enumerate(ids[:7])]
+    player_decks = (
+        [("#P1", "d1", 0, 0), ("#P2", "d2", 0, 0)]
+        if empty_topn
+        else [("#P1", "d1", 5, 3), ("#P2", "d2", 2, 3), ("#P2", "d9", 1, 0)]
+    )
+    stats = "uses long, wins long"
+    return {
+        "deck_types": df([("Bait",), ("Cycle",)], "deck_type string"),
+        "player": df(
+            [("#P1", "a", 7000, 1), ("#P2", "b", 6900, 2)],
+            "player_tag string, player_name string, trophies long, rank_global int",
+        ),
+        "decks": df(
+            [("d1", "Bait"), ("d2", "unknown")], "deck_hash string, deck_type string"
+        ),
+        "deck_cards": df(
+            deck_cards,
+            "deck_hash string, card_id long, card_variant string, slot int",
+        ),
+        "player_decks": df(
+            player_decks, f"player_tag string, deck_hash string, {stats}"
+        ),
+        "meta_deck_types": df(
+            [("Bait", 4, 2), ("unknown", 6, 3)], f"deck_type string, {stats}"
+        ),
+        "meta_type_deck_ids": df(
+            [("Bait", "d1", 4, 2), ("unknown", "d2", 6, 7)],
+            f"deck_type string, deck_hash string, {stats}",
+        ),
+        "meta_type_cards": df(
+            [("Bait", ids[0], "normal", 4, 2)],
+            f"deck_type string, card_id long, card_variant string, {stats}",
+        ),
+        "player_type_cards": df(
+            [("#P1", "Bait", ids[0], "normal", 5, -1)],
+            "player_tag string, deck_type string, card_id long, "
+            f"card_variant string, {stats}",
+        ),
+        "meta_type_matchups": df(
+            [("Bait", "unknown", 4, 2), ("unknown", "Bait", 6, 2)],
+            f"deck_type string, opp_deck_type string, {stats}",
+        ),
+    }
+
+
+# run_all's (name, passed, detail) list on _corrupt_warehouse(), as the
+# one-action-per-check suite returned it; with empty_topn, three checks
+# change (the bad player_decks row is gone, topn = 0).
+_RUN_ALL = [
+    ("deck_cards_8_rows", False, "1 decks with != 8 cards"),
+    ("wins_uses_sanity:player_decks", False, "1 violating rows"),
+    ("wins_uses_sanity:meta_deck_types", True, "0 violating rows"),
+    ("wins_uses_sanity:meta_type_deck_ids", False, "1 violating rows"),
+    ("wins_uses_sanity:meta_type_cards", True, "0 violating rows"),
+    ("wins_uses_sanity:player_type_cards", False, "1 violating rows"),
+    ("wins_uses_sanity:meta_type_matchups", True, "0 violating rows"),
+    ("non_empty_meta", True, "2 rows"),
+    ("unknown_ratio", False, "ratio=0.600 (max 0.3)"),
+    ("topn_meta_bound", True, "topn=8 meta=10"),
+    ("player_count", False, "got 2, expected 3"),
+    ("fk:deck_cards.deck_hash->decks.deck_hash", True, "0 orphans"),
+    ("fk:player_decks.deck_hash->decks.deck_hash", False, "1 orphans"),
+    ("fk:player_decks.player_tag->player.player_tag", True, "0 orphans"),
+    ("fk:decks.deck_type->deck_types.deck_type", False, "1 orphans"),
+    ("fk:meta_type_deck_ids.deck_hash->decks.deck_hash", True, "0 orphans"),
+]
+_RUN_ALL_EMPTY_TOPN = {
+    "wins_uses_sanity:player_decks": (True, "0 violating rows"),
+    "topn_meta_bound": (True, "topn=0 meta=10"),
+    "fk:player_decks.deck_hash->decks.deck_hash": (True, "0 orphans"),
+}
+# validation_report's violations per check; every other check has 0.
+# With empty_topn, G5 FAILS in the report while run_all passes it.
+_REPORT = {
+    "deck_cards_8_rows": 1,
+    "wins_uses_sanity:player_decks": 1,
+    "wins_uses_sanity:meta_type_deck_ids": 1,
+    "wins_uses_sanity:player_type_cards": 1,
+    "unknown_ratio": 1,
+    "player_count": 1,
+    "fk:player_decks.deck_hash->decks.deck_hash": 1,
+    "fk:decks.deck_type->deck_types.deck_type": 1,
+}
+_REPORT_EMPTY_TOPN = {
+    "wins_uses_sanity:player_decks": 0,
+    "fk:player_decks.deck_hash->decks.deck_hash": 0,
+    "topn_meta_bound": 1,
+}
+
+
+@pytest.mark.parametrize("empty_topn", [False, True], ids=["topn", "topn0"])
+def test_validation_parity_on_seeded_corruption(spark, empty_topn):
+    """run_all and validation_report read one shared plan; on seeded
+    corruption both return exactly what the per-check suite did,
+    including their one known difference (G5 with an empty TopN total:
+    run_all passes, the report fails)."""
+    tables = _corrupt_warehouse(spark, empty_topn)
+    changed = _RUN_ALL_EMPTY_TOPN if empty_topn else {}
+    want = [(n, *changed.get(n, (p, d))) for n, p, d in _RUN_ALL]
+    got = [
+        (c.name, c.passed, c.detail)
+        for c in validate.run_all(tables, expected_top_n=3)
+    ]
+    assert got == want
+
+    violations = {n: _REPORT.get(n, 0) for n, _, _ in _RUN_ALL}
+    violations.update(_REPORT_EMPTY_TOPN if empty_topn else {})
+    report = validate.validation_report(tables, expected_top_n=3)
+    assert report.dtypes == [
+        ("check_name", "string"), ("violations", "bigint"), ("passed", "boolean")
+    ]
+    assert sorted(tuple(r) for r in report.collect()) == sorted(
+        (n, v, v == 0) for n, v in violations.items()
+    )
 
 
 def test_catalog_smoke(spark):

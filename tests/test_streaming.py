@@ -72,7 +72,7 @@ def test_incremental_snapshot_foreachbatch(spark, landing, tmp_path):
             streaming.stream_battles(sess, landing_dir).schema
         ).parquet(bronze_dir)
         result = pipeline.build_snapshot(
-            sess, bronze_df, lb_df, cat_df, ov_df, top_n=5, collect_counters=False
+            sess, bronze_df, lb_df, cat_df, ov_df, top_n=5
         )
         result.tables["meta_deck_types"].write.mode("overwrite").parquet(
             f"{out}/meta_deck_types"

@@ -89,7 +89,7 @@ def main() -> None:
         before = jvm_totals()
         t0 = time.perf_counter()
         result = pl.build_snapshot(
-            spark, bdf, ldf, cdf, odf, top_n=50, collect_counters=False
+            spark, bdf, ldf, cdf, odf, top_n=50
         )
         t_build = time.perf_counter() - t0
         t1 = time.perf_counter()

@@ -62,7 +62,6 @@ def snapshot_tables(spark: SparkSession) -> dict[str, DataFrame]:
                 spark, os.path.join(FIXTURE_DIR, "overrides.parquet")
             ),
             top_n=TOP_N,
-            collect_counters=False,
         )
         _CACHE[key] = result.tables
     return _CACHE[key]

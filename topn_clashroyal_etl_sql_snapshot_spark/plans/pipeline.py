@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import exprs
@@ -190,9 +190,10 @@ def extracted_battles(deduped: DataFrame, maps: dict) -> DataFrame:
 def scan_counters_report(battles: DataFrame, catalog: DataFrame) -> DataFrame:
     """E7 scan counters (scripts:249,261 accounting) as a relational
     (counter, value) report — the driver-checkable twin of the
-    ``SnapshotResult.counters`` dict (which ``build_snapshot`` collects
-    eagerly for CLI logging). ``valid_battles`` additionally counts
-    battles surviving structural/deck validation;
+    ``SnapshotResult.counters`` dict (which ``build_snapshot`` observes
+    inside its participant checkpoint job, for CLI logging).
+    ``valid_battles`` additionally counts battles surviving
+    structural/deck validation;
     ``stream_deduped_matches`` counts the deduped matches whose
     battleTime parses as the streaming watermark event time — the batch
     statement of what the Structured Streaming dedup twin
@@ -321,27 +322,29 @@ def build_snapshot(
     catalog: DataFrame,
     overrides: DataFrame,
     top_n: int = 20,
-    collect_counters: bool = True,
 ) -> SnapshotResult:
     """Run the full snapshot ETL; returns all 11 warehouse tables as
     (lazy) DataFrames sharing one persisted participant core.
 
-    ``collect_counters=False`` skips the E7 scan counters (two extra
-    actions) — use for latency-sensitive runs; the tables are unaffected.
+    The E7 scan counters ride the participant checkpoint job as two
+    ``Observation``s, so the landing zone is scanned once and the
+    counters cost no job of their own.
     """
     maps = deck_ops.catalog_maps(catalog)
 
     player = top_players_df(leaderboard, top_n)
 
-    # E7 counter (scripts:249) — raw battlelog entries scanned
-    scanned_entries = battles.count() if collect_counters else -1
-
-    deduped = deduped_battles(battles)
-
-    # E7 counter (scripts:261) — counted BEFORE structural/deck validation,
-    # matching the reference's accounting (dedup happens at scripts:257-261,
+    # E7 counters, observed on LINEAR plan segments only (the rule of
+    # plans/ingest.py: an observe below a fan-out would be duplicated
+    # into every branch and double-count). ``scanned_entries``
+    # (scripts:249) counts raw battlelog entries; ``deduped_matches``
+    # (scripts:261) counts BEFORE structural/deck validation, matching
+    # the reference's accounting (dedup happens at scripts:257-261,
     # battles can still be discarded later at :279-282).
-    deduped_matches = deduped.count() if collect_counters else -1
+    obs_scanned, obs_deduped = Observation(), Observation()
+    deduped = deduped_battles(
+        battles.observe(obs_scanned, F.count(F.lit(1)).alias("n"))
+    ).observe(obs_deduped, F.count(F.lit(1)).alias("n"))
 
     # --- D1 unpivot to participant grain + materialize -------------------
     # localCheckpoint, not persist (r17, guide §3.3 "materialising an
@@ -534,8 +537,8 @@ def build_snapshot(
         "meta_type_matchups": meta_type_matchups,
     }
     counters = {
-        "scanned_entries": scanned_entries,
-        "deduped_matches": deduped_matches,
+        "scanned_entries": int(obs_scanned.get["n"]),
+        "deduped_matches": int(obs_deduped.get["n"]),
     }
     return SnapshotResult(
         tables=tables,

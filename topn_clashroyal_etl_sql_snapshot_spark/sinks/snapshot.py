@@ -30,7 +30,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 
@@ -39,7 +41,20 @@ def write_snapshot(
     warehouse_dir: str,
     partition_keys: dict[str, list[str]] | None = None,
 ) -> None:
-    """Write every table under ``warehouse_dir/<name>/`` in overwrite mode."""
+    """Write every table under ``warehouse_dir/<name>/`` in overwrite mode.
+
+    The per-table writes are independent jobs, most of them 1-2 tasks
+    over the small rollups, so run one after another they leave the
+    cores idle behind per-job driver and scheduling cost. They are
+    submitted from a thread pool of ``defaultParallelism`` threads
+    instead: enough to keep every core busy, bounded so the concurrent
+    writers' buffers stay bounded too. Each thread inherits the
+    caller's local properties and tags (job group, description), so
+    the jobs stay attributed to the caller. The first failure is
+    re-raised only after every write already running has finished
+    (writes not yet started are cancelled): no job of this call
+    outlives it, and a failed write raises before
+    :func:`write_snapshot_atomic` swaps anything."""
     default_partitioning = {
         # read patterns filter by archetype (dashboard drill-down) —
         # partition pruning replaces the reference's B-tree indexes
@@ -47,11 +62,32 @@ def write_snapshot(
         "meta_type_deck_ids": ["deck_type"],
     }
     pk = {**default_partitioning, **(partition_keys or {})}
-    for name, df in tables.items():
+    if not tables:
+        return
+    spark = next(iter(tables.values())).sparkSession
+
+    def write(name: str, df: DataFrame) -> None:
         writer = df.write.mode("overwrite")
         if name in pk:
             writer = writer.partitionBy(*pk[name])
         writer.parquet(os.path.join(warehouse_dir, name))
+
+    workers = min(len(tables), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # one wrapper per table: each captures its own copy of the
+        # caller's local properties, so concurrent SQL executions never
+        # share (and overwrite) one properties object
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        ]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            f.cancel()  # only writes not yet started; a no-op otherwise
+    # the pool has drained: every started write has returned
+    for f in futures:
+        if not f.cancelled() and f.exception() is not None:
+            raise f.exception()
 
 
 def write_snapshot_atomic(
@@ -65,9 +101,11 @@ def write_snapshot_atomic(
     stage-and-swap: every table is written under
     ``<warehouse_dir>__staging`` first, and only after ALL writes
     succeed is the staging directory swapped into place (current →
-    ``__old``, staging → current, ``__old`` removed). A failure while
-    staging table k leaves the serving directory byte-for-byte the
-    complete OLD snapshot; a reader resolving paths under
+    ``__old``, staging → current, ``__old`` removed). The tables are
+    staged concurrently by :func:`write_snapshot`, which re-raises a
+    failed table only after the writes still running have finished,
+    so a failure while staging any table leaves the serving directory
+    byte-for-byte the complete OLD snapshot; a reader resolving paths under
     ``warehouse_dir`` sees either the full old set or the full new one.
 
     The swap is two LOCAL-filesystem directory renames — atomic

@@ -62,10 +62,17 @@ def read_overrides(spark: SparkSession, path: str | None) -> DataFrame:
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    """Read one warehouse table written by the snapshot sink."""
+    """Read one warehouse table written by the snapshot sink, with its
+    declared schema rather than the one its footers imply: no
+    footer-inference job per read, and a column whose file type the
+    declared type cannot read fails at scan time instead of being
+    inferred away. Partition columns (the sink's ``deck_type``
+    directories) come last, as inference puts them."""
     if name not in WAREHOUSE_SCHEMAS:
         raise KeyError(f"unknown warehouse table {name!r}")
-    return spark.read.parquet(os.path.join(warehouse_dir, name))
+    return spark.read.schema(WAREHOUSE_SCHEMAS[name]).parquet(
+        os.path.join(warehouse_dir, name)
+    )
 
 
 # Session-scoped read-relation cache for read_testdata (r16, guide §6:
